@@ -2,7 +2,7 @@
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 # String literals the reference scrubs out of written files
@@ -27,16 +27,3 @@ def null_literal_scrub(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
     return F.when(c.isin(*NULL_LITERALS), F.lit("")).otherwise(c)
 
-
-def scrub_all_string_columns(df: DataFrame) -> DataFrame:
-    """Apply F11 to every string column (pre-write, fused into the one
-    write action instead of the reference's re-read/rewrite pass)."""
-    from pyspark.sql.types import StringType
-
-    return df.withColumns(
-        {
-            f.name: null_literal_scrub(F.col(f.name))
-            for f in df.schema.fields
-            if isinstance(f.dataType, StringType)
-        }
-    )

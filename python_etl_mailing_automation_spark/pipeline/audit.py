@@ -8,14 +8,34 @@ outputs — used both as a runtime auditor and as the pytest assertion.
 
 from __future__ import annotations
 
+import functools
+import operator
 from collections.abc import Sequence
 from dataclasses import dataclass
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..functions.cleaning import normalize_key
+
+
+def blocked_status_hit(
+    output: DataFrame,
+    blocklist: Sequence[str],
+    *,
+    columns: Sequence[str] | None = None,
+) -> Column:
+    """The laudo rule as one predicate: true where ANY audited column of
+    ``output`` (default: every string column) contains a blocklisted value,
+    normalized trim+lower on both sides. Config-sized literal list, no
+    joins; usable as a filter or summed inside an aggregate."""
+    normalized_block = sorted({b.strip().lower() for b in blocklist})
+    cols = list(columns) if columns else [
+        f.name for f in output.schema.fields if f.dataType.simpleString() == "string"
+    ]
+    hits = [normalize_key(F.col(c)).isin(normalized_block) for c in cols]
+    return functools.reduce(operator.or_, hits) if hits else F.lit(False)
 
 
 def audit_no_blocked_status(
@@ -24,21 +44,11 @@ def audit_no_blocked_status(
     *,
     columns: Sequence[str] | None = None,
 ) -> DataFrame:
-    """Rows of ``output`` where ANY audited column contains a blocklisted
-    value (normalized trim+lower on both sides). Empty result = invariant
-    holds. One scan over the output, no joins (config-sized literal list).
+    """Rows of ``output`` that break the laudo rule
+    (:func:`blocked_status_hit`). Empty result = invariant holds. One
+    scan over the output.
     """
-    normalized_block = sorted({b.strip().lower() for b in blocklist})
-    cols = list(columns) if columns else [
-        f.name for f in output.schema.fields if f.dataType.simpleString() == "string"
-    ]
-    if not cols:
-        return output.limit(0)
-    cond = None
-    for c in cols:
-        hit = normalize_key(F.col(c)).isin(normalized_block)
-        cond = hit if cond is None else (cond | hit)
-    return output.filter(cond)
+    return output.filter(blocked_status_hit(output, blocklist, columns=columns))
 
 
 @dataclass

@@ -22,9 +22,9 @@ sort (see operators.ordering).
 
 from __future__ import annotations
 
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
@@ -45,7 +45,6 @@ from ..operators.ordering import with_priority_level
 from ..operators.phones import spread_phone_columns
 from ..operators.sets import union_all_by_name
 from ..schema import ensure_columns, normalize_column_names
-from ..stage import ProcessReport
 
 # Date columns coerced by the reference (processing_pipeline.py:45).
 DATE_COLUMNS = (
@@ -75,7 +74,9 @@ class MailingResult:
     human: DataFrame
     robot: DataFrame
     rejected: DataFrame
-    report: ProcessReport = field(default_factory=ProcessReport)
+    #: ``(stage name, row-count observation, message)`` per stage that ran,
+    #: in pipeline order — :func:`..report.process_report` input.
+    stages: list[tuple[str, Observation, str]]
 
 
 def process_mailing(
@@ -85,7 +86,6 @@ def process_mailing(
     enrichment_sheets: list[DataFrame] | None = None,
     regras_disposicao: DataFrame | None = None,
     dedup_tiebreaker: str | None = None,
-    counted_report: bool = False,
 ) -> MailingResult:
     """Full stage-2 pipeline; returns lazy human/robot/rejected frames.
 
@@ -93,19 +93,25 @@ def process_mailing(
     step; every operator degrades gracefully when its columns are absent,
     as the reference does (SURVEY.md §1.3).
 
-    ``counted_report=True`` populates ``result.report`` with the
-    reference's per-stage counts (processing_pipeline.py:313-347) — each
-    row-count-changing stage is cached, counted, and released. Counting
-    forces materialization (one extra pass per stage), so it is opt-in:
-    at scale, run with it off and rely on the final metrics instead.
+    Each stage of the reference's process report
+    (processing_pipeline.py:313-347) that runs attaches a row-count
+    :class:`~pyspark.sql.Observation` to its output (``result.stages``).
+    The observations are filled in by the first action that scans a
+    frame downstream of them in full (writing ``human`` does) — no extra
+    Spark job — and only then may :func:`..report.process_report` read
+    them.
     """
     df = normalize_column_names(mailing)
     cols = set(df.columns)
-    # (stage name, frame AFTER the stage, message) — counted at the end
-    # when requested; names match processing_pipeline.py:317-347.
-    checkpoints: list[tuple[str, DataFrame, str]] = [
-        ("Carregamento de Dados", df, "Mailing consolidado carregado.")
-    ]
+    # Names and messages match processing_pipeline.py:317-347.
+    stages: list[tuple[str, Observation, str]] = []
+
+    def stage_done(frame: DataFrame, name: str, message: str) -> DataFrame:
+        obs = Observation()
+        stages.append((name, obs, message))
+        return frame.observe(obs, F.count(F.lit(1)).alias("n"))
+
+    df = stage_done(df, "Carregamento de Dados", "Mailing consolidado carregado.")
 
     # -- F4 date coercion (processing_pipeline.py:310) --
     df = df.withColumns(
@@ -135,8 +141,8 @@ def process_mailing(
             df = anti_join_on_keys(
                 df, bad, df_key=normalize_key("ncpf"), keys_key="bad_key"
             )
-            checkpoints.append(
-                ("Remoção por Tabulação", df, "Clientes com status crítico removidos.")
+            df = stage_done(
+                df, "Remoção por Tabulação", "Clientes com status crítico removidos."
             )
 
     # -- W1 smart dedup (:320). The reference's tie order was whatever the
@@ -146,8 +152,8 @@ def process_mailing(
         df = smart_dedup_prefer_named(
             df, "ncpf", "nomecad", tiebreaker=dedup_tiebreaker
         )
-        checkpoints.append(
-            ("Deduplicação por 'ncpf'", df, "Duplicatas resolvidas (preferência a nomeados).")
+        df = stage_done(
+            df, "Deduplicação por 'ncpf'", "Duplicatas resolvidas (preferência a nomeados)."
         )
 
     # -- A1/A2 per-CPF aggregates (:326) --
@@ -155,9 +161,7 @@ def process_mailing(
         df = with_group_sum(df, "ncpf", "valor", "valorDivida")
     if {"ncpf", "ucv"} <= cols:
         df = with_distinct_list(df, "ncpf", "ucv", "UCs_Cliente", "Qtd_UCs")
-    checkpoints.append(
-        ("Cálculo de Colunas Agregadas", df, "Colunas agregadas por CPF calculadas.")
-    )
+    df = stage_done(df, "Cálculo de Colunas Agregadas", "Colunas agregadas por CPF calculadas.")
 
     # -- U1 + J1a + J1 + UD1 phone enrichment (:332) --
     enriched_col = None
@@ -193,25 +197,19 @@ def process_mailing(
     df = spread_phone_columns(df, enriched_col, phone_fallbacks)
     if enriched_col:
         df = df.drop(enriched_col)
-    checkpoints.append(
-        ("Enriquecimento de Telefones", df, "Telefones enriquecidos e distribuídos.")
-    )
+    df = stage_done(df, "Enriquecimento de Telefones", "Telefones enriquecidos e distribuídos.")
 
     # -- F10 flag (:338) --
     flag_src = (
         F.col("venc_maior_1ano") if "venc_maior_1ano" in cols else F.lit(None)
     )
     df = df.withColumn("Cliente_Regulariza", conditional_flag_sim_nao(flag_src))
-    checkpoints.append(
-        ("Criação de 'Cliente_Regulariza'", df, "Flag Cliente_Regulariza criada.")
-    )
+    df = stage_done(df, "Criação de 'Cliente_Regulariza'", "Flag Cliente_Regulariza criada.")
 
     # -- P6 + S8 blocklist filter with side output (:344) --
     if "bloq" in cols and config.blocklist:
         df, rejected = blocklist_filter(df, "bloq", config.blocklist)
-        checkpoints.append(
-            ("Filtro de Bloqueio ('bloq')", df, "Status de bloqueio removidos.")
-        )
+        df = stage_done(df, "Filtro de Bloqueio ('bloq')", "Status de bloqueio removidos.")
     else:
         rejected = df.limit(0).withColumn("motivo_remocao", F.lit(None).cast("string"))
 
@@ -240,30 +238,4 @@ def process_mailing(
     else:
         human = robot = df
 
-    report = ProcessReport()
-    if counted_report:
-        # Count each checkpoint off its cache; each stage's count job
-        # reads the previous stage's cache, so the chain materializes
-        # once per stage, not once per lineage. Caches are released —
-        # the recorded numbers are what the caller keeps.
-        from ..stage import StageReport
-
-        cached = [(name, frame.cache(), msg) for name, frame, msg in checkpoints]
-        try:
-            prev_count: int | None = None
-            for name, frame, msg in cached:
-                n = frame.count()
-                report.add(
-                    StageReport(
-                        name=name,
-                        initial=n if prev_count is None else prev_count,
-                        final=n,
-                        message=msg,
-                    )
-                )
-                prev_count = n
-        finally:
-            for _, frame, _ in cached:
-                frame.unpersist()
-
-    return MailingResult(human=human, robot=robot, rejected=rejected, report=report)
+    return MailingResult(human=human, robot=robot, rejected=rejected, stages=stages)

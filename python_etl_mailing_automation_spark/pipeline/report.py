@@ -1,23 +1,99 @@
-"""Run-report rendering (SURVEY.md §3.4).
+"""The per-stage process report and its rendering (SURVEY.md §3.4).
 
-Mirrors the reference's ``ExecutionReporter.generate_final_report``
-(logger_setup.py:27-77): a fixed-width stage table (initial row, then
-removed/remaining per stage), attention points, and the run-over-run
-human/robot volume comparison. The engine renders from
-:class:`~..stage.ProcessReport` + the metrics dicts the job runner
-already produces; emitting to a logger is the caller's choice.
+Mirrors the reference's ``ExecutionReporter`` (logger_setup.py:27-77),
+which appends ``{name, initial, removed, final, message}`` per operator
+(processing_pipeline.py:313-347) and renders a fixed-width stage table
+(initial row, then removed/remaining per stage), attention points, and
+the run-over-run human/robot volume comparison.
+
+In Spark, counting a stage forces its materialization. The counts here
+are ``DataFrame.observe`` row counts instead: each stage boundary carries
+an :class:`~pyspark.sql.Observation` that the run's write actions fill
+in as they scan the stage, so the report costs no Spark job. The report
+is built only after those actions have run; emitting it to a logger is
+the caller's choice.
 """
 
 from __future__ import annotations
 
+import time
 from collections.abc import Sequence
+from dataclasses import dataclass, field
 from typing import Any
 
-from ..stage import ProcessReport
+from pyspark.sql import Observation
 
 #: Stage name the reference treats as the initial-count row
 #: (logger_setup.py:41).
 LOAD_STAGE = "Carregamento de Dados"
+
+
+@dataclass
+class StageReport:
+    name: str
+    initial: int
+    final: int
+    message: str = ""
+
+    @property
+    def removed(self) -> int:
+        return self.initial - self.final
+
+
+@dataclass
+class ProcessReport:
+    stages: list[StageReport] = field(default_factory=list)
+
+
+#: How long :func:`observed_counts` waits for an observation's metrics.
+#: ``Observation.get`` blocks forever when no action ever ran the observed
+#: frame; a bounded wait turns that bug into an error instead of a hang.
+_OBSERVATION_WAIT_S = 60.0
+
+
+def observed_counts(obs: Observation, *names: str) -> list[int]:
+    """The count metrics ``names`` of ``obs``, once an action has scanned
+    its frame.
+
+    The metrics are delivered by a query listener shortly after the action
+    returns, so wait for them, but at most :data:`_OBSERVATION_WAIT_S`,
+    then raise instead of hanging. When a stage below the observed node
+    comes out empty, adaptive execution runs no partition through it and
+    delivers an empty row, which ``Observation.get`` cannot convert; for
+    counts it means zero rows.
+    """
+    # The one use of JVM handles in the package: the JVM Observation's
+    # ``future()`` (to wait without blocking forever) and ``getRow()``
+    # (which ``Observation.get`` itself calls), checked on Spark 4.1.2 and
+    # hence the ``pyspark>=4.1`` floor in pyproject.toml. Spark Connect's
+    # Observation has no ``_jo``; this path needs a classic session.
+    deadline = time.monotonic() + _OBSERVATION_WAIT_S
+    while not obs._jo.future().isCompleted():
+        if time.monotonic() > deadline:
+            raise RuntimeError(
+                "observed metrics never arrived: no action scanned the observed frame"
+            )
+        time.sleep(0.005)
+    if obs._jo.getRow().length() == 0:
+        return [0] * len(names)
+    metrics = obs.get
+    return [metrics[n] for n in names]
+
+
+def process_report(stages: Sequence[tuple[str, Observation, str]]) -> ProcessReport:
+    """Build the report from ``(stage name, row-count observation,
+    message)`` triples in pipeline order; a stage's ``initial`` is the
+    previous stage's ``final``. Call only after the actions that scan the
+    observed frames have run."""
+    report = ProcessReport()
+    prev: int | None = None
+    for name, obs, message in stages:
+        (n,) = observed_counts(obs, "n")
+        report.stages.append(
+            StageReport(name=name, initial=n if prev is None else prev, final=n, message=message)
+        )
+        prev = n
+    return report
 
 
 def _volume_line(label: str, current: Any, previous: Any) -> str:

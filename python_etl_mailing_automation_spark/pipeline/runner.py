@@ -13,7 +13,8 @@ from dataclasses import dataclass, field
 from datetime import datetime
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 
 from ..config import PipelineConfig
 from ..schema import normalize_column_names, validate_required_columns
@@ -26,11 +27,12 @@ from ..sources.io import (
     write_partitioned_by_key,
 )
 from ..sources.state import StateManager, VolumeOutlier, detect_volume_outliers
-from ..stage import ProcessReport
-from .audit import audit_no_blocked_status
+# audit_no_blocked_status is not called here; perfbench/workloads.py
+# traces the runner's audit layer by this name.
+from .audit import audit_no_blocked_status, blocked_status_hit  # noqa: F401
 from .export import apply_export_layout
 from .mailing import process_mailing
-from .report import render_run_report
+from .report import ProcessReport, observed_counts, process_report, render_run_report
 from .robot import build_robot_output, route_by_time_slot
 
 
@@ -43,7 +45,7 @@ class JobResult:
     metrics: dict = field(default_factory=dict)
     audit_leaks: int = 0
     volume_outliers: list[VolumeOutlier] = field(default_factory=list)
-    report: "ProcessReport | None" = None
+    report: ProcessReport | None = None
     rendered_report: str | None = None
 
 
@@ -104,9 +106,15 @@ def run_mailing_job(
 ) -> JobResult:
     """End-to-end run: mirrors ``main.py:23-95`` stage for stage.
 
-    ``counted_report=True`` additionally records the reference's
-    per-stage count table and renders it (``result.rendered_report``) —
-    extra materialization per stage, so opt-in.
+    Every run records the reference's per-stage process report
+    (``result.report``) and renders it with the run-over-run volume
+    analysis (``result.rendered_report``). The stage counts and
+    ``result.metrics`` come from ``DataFrame.observe`` metrics that the
+    output writes collect, so neither costs a Spark job: the job's only
+    actions are its sinks.
+
+    ``counted_report`` is deprecated and ignored (the report is always
+    on); it is still accepted so that existing callers keep working.
 
     ``robot_time_in_name=True`` reproduces the reference's robot
     filename shape EXACTLY — ``{prefix}{slot}_{HHMMSS}_{ddmmyyyy}.csv``
@@ -142,9 +150,7 @@ def run_mailing_job(
         enrichment_sheets=enrichment_sheets,
         regras_disposicao=regras,
         dedup_tiebreaker="ucv" if "ucv" in mailing.columns else None,
-        counted_report=counted_report,
     )
-    result.report = res.report
 
     # Stage 3+4 — exports with formatting folded pre-write (no re-reads).
     # Row order inside each file = the reference's priority sort (O1),
@@ -152,8 +158,6 @@ def run_mailing_job(
     # numeric valorDivida before the exporter string-formats it): the sort
     # keys ride along as __ord_* carrier columns through the layout and
     # are dropped after the in-partition sort, never rendered.
-    from pyspark.sql import functions as F  # local to keep module header lean
-
     human = res.human
     human_types = dict(human.dtypes)
     carriers: dict[str, F.Column] = {}
@@ -186,14 +190,25 @@ def run_mailing_job(
     robot = build_robot_output(res.robot, config) if "dtvenc" in res.robot.columns else res.robot
     robot = apply_export_layout(robot, config.robot_export_columns, robot_money=True)
 
-    # The export fan-out (one filtered write per product / per slot) plus
-    # the audit and metric counts below all re-evaluate these frames;
-    # persist so the full mailing DAG executes ONCE per sink family
-    # instead of K+4 times (SURVEY.md §3.4 — the reference materialized
-    # implicitly by being eager pandas, main.py:46-67).
+    # Row counts (and, on human, the laudo rule's hit count over the
+    # rendered columns, sort carriers excluded) ride on the writes as
+    # observations — no count jobs.
+    rows = F.count(F.lit(1)).alias("n")
+    human_obs, robot_obs, rejected_obs = Observation(), Observation(), Observation()
+    leaks = F.count_if(blocked_status_hit(human.drop(*carriers), config.blocklist))
+    human = human.observe(human_obs, rows, leaks.alias("leaks"))
+    robot = robot.observe(robot_obs, rows)
+    rejected = res.rejected.observe(rejected_obs, rows)
+    # The export fan-out (one filtered write per product / per slot)
+    # re-evaluates these frames; persist so the full mailing DAG executes
+    # ONCE per sink family instead of once per file (SURVEY.md §3.4 — the
+    # reference materialized implicitly by being eager pandas,
+    # main.py:46-67).
+    # Observations need the first action on each frame to scan all of it:
+    # no limit/head/isEmpty on these before the writes below.
     human = human.persist()
     robot = robot.persist()
-    rejected = res.rejected.persist()
+    rejected = rejected.persist()
     # Reference-shaped output names, driven by config:
     # human  {output_file_prefix}mailing_{produto}_{date}.csv
     #        (data_exporter.py:57-64)
@@ -235,26 +250,23 @@ def run_mailing_job(
             rejected, output_dir / "rejeitados_por_status_de_bloqueio.csv"
         )
 
-        # Stage 6 (laudo) — the leak invariant as part of the run itself.
-        # (File-level re-audits must treat the configured robot prefix as
-        # the pipe-separator marker: audit_output_dir(...,
-        # robot_markers=(config.robot_output_file_prefix,)).)
-        result.audit_leaks = audit_no_blocked_status(
-            human.drop(*[c for c in carriers if c in human.columns]),
-            config.blocklist,
-        ).count()
-
-        # Epilogue — metrics/state (+ optional zip).
-        result.metrics = {
-            "human": human.count(),
-            "robot": robot.count(),
-            "rejected": rejected.count(),
-            "audit_leaks": result.audit_leaks,
-        }
     finally:
         human.unpersist()
         robot.unpersist()
         rejected.unpersist()
+    # Stage 6 (laudo) — the leak invariant as part of the run itself,
+    # read off the human observation. (File-level re-audits must treat the
+    # configured robot prefix as the pipe-separator marker:
+    # audit_output_dir(..., robot_markers=(config.robot_output_file_prefix,)).)
+    n_human, result.audit_leaks = observed_counts(human_obs, "n", "leaks")
+    # Epilogue — report, metrics/state (+ optional zip).
+    result.report = process_report(res.stages)
+    result.metrics = {
+        "human": n_human,
+        "robot": observed_counts(robot_obs, "n")[0],
+        "rejected": observed_counts(rejected_obs, "n")[0],
+        "audit_leaks": result.audit_leaks,
+    }
     last_metrics: dict = {}
     if state_path is not None:
         sm = StateManager(state_path)
@@ -263,16 +275,15 @@ def run_mailing_job(
         last_metrics = sm.last_metrics()
         result.volume_outliers = detect_volume_outliers(result.metrics, last_metrics)
         sm.save_success(result.metrics)
-    if counted_report:
-        result.rendered_report = render_run_report(
-            res.report,
-            current_metrics=result.metrics,
-            last_metrics=last_metrics,
-            attention_points=[
-                f"{o.metric.upper()}: volume {o.pct_change:+.2f}% vs última execução"
-                for o in result.volume_outliers
-            ],
-        )
+    result.rendered_report = render_run_report(
+        result.report,
+        current_metrics=result.metrics,
+        last_metrics=last_metrics,
+        attention_points=[
+            f"{o.metric.upper()}: volume {o.pct_change:+.2f}% vs última execução"
+            for o in result.volume_outliers
+        ],
+    )
     if make_archive:
         result.archive = archive_run(output_dir)
     return result

@@ -6663,6 +6663,8 @@ class TestQuantileSketch:
         with _pytest.raises(ValueError):
             quantile_sketch(df, "v", n_bands=1)
         with _pytest.raises(ValueError):
+            quantile_sketch(df, "v", key_cols=["v"], boundaries=[1])
+        with _pytest.raises(ValueError):
             quantile_sketch_query(quantile_sketch(df, "v"), [])
         with _pytest.raises(ValueError):
             quantile_sketch_query(quantile_sketch(df, "v"), [1.5])

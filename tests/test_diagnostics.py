@@ -1,15 +1,13 @@
-"""Diagnostics trio (profile/drift), stage reporting, Excel shim."""
+"""Diagnostics trio (profile/drift), Excel shim."""
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from python_etl_mailing_automation_spark.pipeline.diagnostics import (
     profile_unique_values,
     schema_drift,
 )
-from python_etl_mailing_automation_spark.stage import ProcessReport, run_stage
 
 
 def test_profile_unique_values(spark):
@@ -37,31 +35,6 @@ def test_schema_drift(spark):
     d2 = schema_drift(base.select("a", "b"), swapped)
     assert d2.reordered and d2.has_drift
     assert not schema_drift(base, base).has_drift
-
-
-def test_stage_report_counts(spark):
-    df = spark.createDataFrame([(i,) for i in range(10)], "v int")
-    report = ProcessReport()
-    out = run_stage(
-        df,
-        lambda d: d.filter(F.col("v") < 3),
-        name="filtro",
-        report=report,
-        counted=True,
-        message="teste",
-    )
-    assert out.count() == 3
-    row = report.as_rows()[0]
-    assert row == {
-        "etapa": "filtro",
-        "registros_iniciais": 10,
-        "removidos": 7,
-        "registros_finais": 3,
-        "mensagem": "teste",
-    }
-    # counted=False: no report entry, plan untouched
-    out2 = run_stage(df, lambda d: d, name="noop", report=report, counted=False)
-    assert len(report.stages) == 1 and out2 is not None
 
 
 def test_excel_shim_roundtrip(spark, tmp_path):

@@ -113,9 +113,9 @@ def test_audit_output_dir_file_level(spark, input_dir, tmp_path):
 
 
 def test_runner_fanout_reads_from_cache(spark, input_dir, tmp_path, monkeypatch):
-    """Persist fix (VERDICT r1 #1): every per-product/slot write and every
-    metric count must hit the persisted frames (InMemoryRelation in the
-    plan), not re-run the mailing DAG; caches are released afterwards."""
+    """Persist fix (VERDICT r1 #1): every per-product/slot write must hit
+    the persisted frames (InMemoryRelation in the plan), not re-run the
+    mailing DAG; caches are released afterwards."""
     from python_etl_mailing_automation_spark.pipeline import runner as runner_mod
     from python_etl_mailing_automation_spark.sources.io import write_exact_csv
 
@@ -247,7 +247,7 @@ def test_counted_report_renders_reference_table(spark, input_dir, tmp_path):
         spark, cfg, input_dir=input_dir, output_dir=tmp_path / "out_report",
         mailing_pattern="MAILING_NUCLEO_*.csv",
         enrichment_pattern="Pontuacao*.csv", regras_pattern="Tabulacoes*.csv",
-        state_path=tmp_path / "state_report.json", counted_report=True,
+        state_path=tmp_path / "state_report.json",
     )
     names = [s.name for s in result.report.stages]
     assert names == [
@@ -277,9 +277,80 @@ def test_counted_report_renders_reference_table(spark, input_dir, tmp_path):
         spark, cfg, input_dir=input_dir, output_dir=tmp_path / "out_report2",
         mailing_pattern="MAILING_NUCLEO_*.csv",
         enrichment_pattern="Pontuacao*.csv", regras_pattern="Tabulacoes*.csv",
-        state_path=tmp_path / "state_report.json", counted_report=True,
+        state_path=tmp_path / "state_report.json",
     )
     assert "Arquivos HUMANOS: Gerado 0.00% a mais" in result2.rendered_report
+
+
+def test_run_mailing_job_runs_only_its_sinks(spark, input_dir, tmp_path):
+    """The process report and the metrics are observed, not counted: a
+    reintroduced count, audit or cache-build action adds jobs here."""
+    cfg = PipelineConfig(
+        blocklist=["bloqueado"], corte_humano_maior_igual=50.0,
+        critical_statuses=["CLIENTE FALECIDO"], critical_threshold=1,
+        robot_time_slot_groups={"08HRS": ["EPB", "EMT"]},
+    )
+    sc = spark.sparkContext
+    group = "test_run_mailing_job_runs_only_its_sinks"
+    sc.setJobGroup(group, "one run_mailing_job")
+    try:
+        result = run_mailing_job(
+            spark, cfg, input_dir=input_dir, output_dir=tmp_path / "out_jobs",
+            mailing_pattern="MAILING_NUCLEO_*.csv",
+            enrichment_pattern="Pontuacao*.csv", regras_pattern="Tabulacoes*.csv",
+            state_path=tmp_path / "state_jobs.json",
+        )
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    # Sinks only: 3 for the three CSV reads, 8 for the human key listing
+    # and its one product file, 7 each for the robot slot file and the
+    # rejects file (each first action builds its frame's cache, with the
+    # adaptive shuffle and broadcast stages as jobs of their own).
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == 3 + 8 + 7 + 7
+    assert result.metrics == {"human": 1, "robot": 0, "rejected": 1, "audit_leaks": 0}
+    assert result.rendered_report is not None
+
+
+def test_absent_stages_observed_without_blocking(spark, tmp_path):
+    """No 'bloq' column (the empty rejects branch) and no Tabulações file:
+    the run returns, the report lists only the stages that ran, and the
+    observed metrics equal the rows of the written files."""
+    d = tmp_path / "in_nobloq"
+    d.mkdir()
+    d.joinpath("MAILING_NUCLEO_1.csv").write_text(
+        "empresa;ucv;nomecad;ndoc;ncpf;ano;mes;liquido;loc;sit;faixa;iu12m;valor;dtvenc\n"
+        "EPB;U1;Ana;d1;111;2026;8;100,50;NAT;LIGADO;Até 30;SIM;100,50;05/01/2026\n"
+        "EPB;U4;Ana;d1;111;2026;8;10,00;NAT;LIGADO;Até 30;SIM;10,00;05/02/2026\n"
+        "EMT;U2;Bia;d2;222;2026;8;900,00;CGR;DESLIGADO;Até 90;NÃO;900,00;15/02/2026\n"
+        "EMT;U3;Caio;d3;333;2026;8;20,00;CGR;LIGADO;Até 30;NÃO;20,00;\n",
+        encoding="utf-8",
+    )
+    cfg = PipelineConfig(blocklist=["bloqueado"], corte_humano_maior_igual=50.0)
+    result = run_mailing_job(
+        spark, cfg, input_dir=d, output_dir=tmp_path / "out_nobloq",
+        mailing_pattern="MAILING_NUCLEO_*.csv", regras_pattern="NO_MATCH_*",
+    )
+    assert [(s.name, s.initial, s.final) for s in result.report.stages] == [
+        ("Carregamento de Dados", 4, 4),
+        ("Deduplicação por 'ncpf'", 4, 3),
+        ("Cálculo de Colunas Agregadas", 3, 3),
+        ("Enriquecimento de Telefones", 3, 3),
+        ("Criação de 'Cliente_Regulariza'", 3, 3),
+    ]
+
+    def data_rows(path):
+        return len(path.read_text(encoding="utf-8").splitlines()) - 1
+
+    assert result.metrics == {
+        "human": sum(data_rows(p) for p in result.human_files),
+        "robot": sum(data_rows(p) for p in result.robot_files),
+        "rejected": data_rows(result.rejected_file),
+        "audit_leaks": 0,
+    }
+    assert result.metrics["human"] == 2 and result.metrics["rejected"] == 0
+    assert "Filtro de Bloqueio" not in result.rendered_report
 
 
 def test_human_file_rows_priority_ordered(spark, tmp_path):
